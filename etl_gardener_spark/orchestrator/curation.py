@@ -225,11 +225,11 @@ class CurationActions:
         )
 
     def _rewrite(self, job: J.Job, df: DataFrame, n_rows: int) -> None:
-        # localCheckpoint before overwriting the partition being read —
-        # same discipline as TableOps.dedup (can't overwrite a path
-        # while scanning it). Dynamic partition-overwrite is a no-op for
-        # an EMPTY DataFrame (no date= directory present in df means no
-        # directory replaced), so a gate that rejects every row of the
+        # localCheckpoint before overwriting the partition being read
+        # (can't overwrite a path while scanning it). Dynamic
+        # partition-overwrite is a no-op for an EMPTY DataFrame (no
+        # date= directory present in df means no directory replaced),
+        # so a gate that rejects every row of the
         # day must drop the stale partition explicitly — the same move
         # operators/quality.py makes for its all-rejected case.
         if n_rows == 0:

@@ -7,12 +7,12 @@ five stages are DataFrame programs against a :class:`~.warehouse.Warehouse`:
 
     T1 LoadToTmp   read JSONL day prefix -> append tmp partition
                    (cloud/bq/ops.go:130-155)
-    T2 Dedup       keep-best window over tmp partition -> overwrite it
+    T2 Dedup       keep-best window over tmp partition -> replace it
                    (cloud/bq/ops.go:105-127, template 184-218)
-    T3 CopyToRaw   tmp partition -> overwrite raw partition
+    T3 CopyToRaw   tmp partition -> replace raw partition
                    (cloud/bq/ops.go:158-176)
     T4 DeleteTmp   drop tmp partition (cloud/bq/ops.go:221-228)
-    T5 Join        raw ⟕ annotation window -> overwrite join partition
+    T5 Join        raw ⟕ annotation window -> replace join partition
                    (cloud/bq/ops.go:256-295, template 234-253)
 
 Every op takes ``dry_run`` (T8, cloud/bq/ops.go:105-127): instead of
@@ -25,10 +25,15 @@ from BigQuery job statistics for metrics (ops/actions.go:150-170, 290-309:
 SlotMillis, NumDMLAffectedRows, input files/bytes, output rows).
 
 Idempotence & restartability: each stage is a pure function of its input
-partition and overwrites its output partition atomically (dynamic partition
-overwrite), so a stage can be re-run after a crash without double-applying —
-the property the reference gets from "no leases survive restart"
-(ops/ops.go:33-40) plus WriteTruncate.
+partition and replaces its output partition by a staged swap
+(:meth:`~.warehouse.Warehouse.replace_day`): one write job stages the day
+under ``_staging/`` and counts its rows, then the staged dir is renamed into
+place. A stage can be re-run after a crash without double-applying — the
+property the reference gets from "no leases survive restart"
+(ops/ops.go:33-40) plus WriteTruncate — and a crash between the swap's
+delete and rename is completed by ``warehouse.recover_staging`` at boot.
+Like a BigQuery job, each of T2/T3/T5 is one write whose statistics carry
+its row counts.
 """
 
 from __future__ import annotations
@@ -41,6 +46,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 from etl_gardener_spark.operators.dedup import DedupSpec, active_spec, dedup_keep_best
 from etl_gardener_spark.operators.join import join_annotate
@@ -154,25 +160,26 @@ class TableOps:
         """Keep-best dedup of the tmp day partition, in place
         (cloud/bq/ops.go:105-127; template 184-218).
 
-        Parquet has no in-place DELETE, so survivors are computed and the
-        day partition is rewritten via staged overwrite. ``rows_deleted``
-        mirrors NumDMLAffectedRows (ops/actions.go:160-165).
+        Parquet has no in-place DELETE, so the survivors are written
+        through the staged swap (:meth:`Warehouse.replace_day`) in one job
+        that also counts the scanned rows (an ``Observation`` on the scan,
+        not built on the dry-run path — see :meth:`load_to_tmp`).
+        ``rows_deleted`` mirrors NumDMLAffectedRows (ops/actions.go:160-165).
         """
         j = self.job
         df = self.wh.read_partition(self.spark, "tmp", j.experiment, j.datatype, j.date)
-        kept = dedup_keep_best(df, self.dedup_spec)
         if dry_run:
+            kept = dedup_keep_best(df, self.dedup_spec)
             return OpStats(op="dedup", dry_run_plan=explain_str(kept))
         t0 = time.monotonic()
-        before = df.count()
-        # Stage survivors before overwriting the partition being read
-        # (can't overwrite a path while scanning it).
-        staged = kept.localCheckpoint(eager=True) if before else kept
-        after = staged.count()
-        if after != before:
-            self.wh.overwrite_partitions(
-                staged, "tmp", j.experiment, j.datatype
-            )
+        scanned = Observation()
+        kept = dedup_keep_best(
+            df.observe(scanned, F.count(F.lit(1)).alias("n")), self.dedup_spec
+        )
+        after = self.wh.replace_day(
+            self.spark, kept, "tmp", j.experiment, j.datatype, j.date, "dedup"
+        )
+        before = int(scanned.get["n"])
         return OpStats(
             op="dedup",
             rows_out=after,
@@ -190,10 +197,9 @@ class TableOps:
         if dry_run:
             return OpStats(op="copy_to_raw", dry_run_plan=explain_str(df))
         t0 = time.monotonic()
-        self.wh.overwrite_partitions(df, "raw", j.experiment, j.datatype)
-        rows = self.wh.read_partition(
-            self.spark, "raw", j.experiment, j.datatype, j.date
-        ).count()
+        rows = self.wh.replace_day(
+            self.spark, df, "raw", j.experiment, j.datatype, j.date, "copy"
+        )
         return OpStats(op="copy_to_raw", rows_out=rows, elapsed_sec=time.monotonic() - t0)
 
     # -- T4 ---------------------------------------------------------------
@@ -244,8 +250,7 @@ class TableOps:
         if dry_run:
             return OpStats(op="join", dry_run_plan=explain_str(out))
         t0 = time.monotonic()
-        self.wh.overwrite_partitions(out, "join", j.experiment, j.datatype)
-        rows = self.wh.read_partition(
-            self.spark, "join", j.experiment, j.datatype, j.date
-        ).count()
+        rows = self.wh.replace_day(
+            self.spark, out, "join", j.experiment, j.datatype, j.date, "join"
+        )
         return OpStats(op="join", rows_out=rows, elapsed_sec=time.monotonic() - t0)

@@ -11,10 +11,14 @@ contract on Hive-partitioned Parquet:
 Partition-grain semantics on plain Parquet:
 
 * **Replace one day** (BigQuery WriteTruncate + partition decorator,
-  cloud/bq/ops.go:158-176) → ``INSERT OVERWRITE`` with
-  ``spark.sql.sources.partitionOverwriteMode=dynamic``: Spark stages the new
-  files and commits only the ``date=`` directories present in the incoming
-  DataFrame. Other days are untouched.
+  cloud/bq/ops.go:158-176) → staged swap (:meth:`Warehouse.replace_day`):
+  ONE write job stages the day under ``<root>/_staging/`` and counts its
+  rows on the way (an ``Observation``, the analogue of the job statistics'
+  output rows), then ``delete(target)``, ``mkdirs(parent)``,
+  ``rename(staged, target)`` commit it. Other days are untouched, and the
+  write may read the very partition it replaces. Multi-day writes use
+  ``INSERT OVERWRITE`` with dynamic partition overwrite
+  (:meth:`Warehouse.overwrite_partitions`).
 * **Append a day** (BigQuery WriteAppend load, cloud/bq/ops.go:130-155) →
   ``mode("append")`` into the partitioned layout.
 * **Drop one day** (table-partition delete, cloud/bq/ops.go:221-228) →
@@ -37,6 +41,7 @@ from datetime import date as Date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 DATE_COL = "date"
 
@@ -56,6 +61,32 @@ def _staged_path(partition_path: str, op: str) -> str:
     root, tierexp = base.rsplit("/", 1)
     return f"{root}/_staging/{tierexp}/{datatype}/{date_part}.__{op}__"
 
+
+def _is_staged_name(name: str) -> bool:
+    """True for a staging dir name ``date=YYYY-MM-DD.__<op>__``."""
+    return name.startswith(f"{DATE_COL}=") and ".__" in name and name.endswith("__")
+
+
+def _swap_into_place(spark: SparkSession, staged: str, path: str) -> None:
+    """Commit a staged write: ``delete(target)``, ``mkdirs(parent)``,
+    ``rename(staged, target)``.
+
+    Between the delete and the rename the staged dir holds the day's ONLY
+    copy; a crash there is completed by :func:`recover_staging`. Hadoop
+    ``FileSystem.rename`` reports failure by returning False rather than
+    raising, so a False return raises here and leaves the staged copy
+    where recover_staging finds it — the op must not report success while
+    the day sits in ``_staging/``.
+    """
+    fs = _hadoop_fs(spark, path)
+    p = _hadoop_path(spark, path)
+    fs.delete(p, True)
+    fs.mkdirs(p.getParent())
+    if not fs.rename(_hadoop_path(spark, staged), p):
+        raise OSError(
+            f"staged swap failed: rename {staged} -> {path} returned false; "
+            "the day's only copy stays staged for recover_staging"
+        )
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -253,6 +284,43 @@ class Warehouse:
             .parquet(self.table_path(tier, experiment, datatype))
         )
 
+    def replace_day(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        tier: str,
+        experiment: str,
+        datatype: str,
+        day: Date,
+        op: str,
+    ) -> int:
+        """Replace one day partition with ``df`` in ONE write job and return
+        the row count observed on that job (T2/T3/T5: WriteTruncate on
+        ``table$YYYYMMDD``, whose job statistics carry the output rows,
+        ops/actions.go:150-170).
+
+        The rows are staged at :func:`_staged_path` (keyed by ``op``) and
+        swapped into place by :func:`_swap_into_place`, so ``df`` may scan
+        the very partition it replaces. An empty ``df`` leaves the target
+        as it was and removes its staging dir, as dynamic partition
+        overwrite does for a day with no incoming rows.
+        """
+        path = self.partition_path(tier, experiment, datatype, day)
+        staged = _staged_path(path, op)
+        obs = Observation()
+        (
+            df.drop(DATE_COL)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet(staged)
+        )
+        rows = int(obs.get["n"])
+        if rows == 0:
+            _hadoop_fs(spark, staged).delete(_hadoop_path(spark, staged), True)
+        else:
+            _swap_into_place(spark, staged, path)
+        return rows
+
     def delete_partition(
         self, spark: SparkSession, tier: str, experiment: str, datatype: str, day: Date
     ) -> bool:
@@ -368,7 +436,6 @@ class Warehouse:
                 int(n_files), *sort_cols
             ).sortWithinPartitions(*sort_cols)
         staged = _staged_path(path, "clustering")
-        fs.delete(_hadoop_path(spark, staged), True)
         # Range boundaries come from reservoir sampling; the default 100
         # samples/partition leaves visible jitter in file bounding boxes.
         # 4x sampling costs microseconds per task and tightens boundaries.
@@ -400,8 +467,7 @@ class Warehouse:
                     maxs.append(st.max)
             if mins:
                 ranges.append((min(mins), max(maxs)))
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         return {"files": len(out), "rows": int(rows), "ranges": sorted(ranges)}
 
     def compact_partition(
@@ -442,7 +508,6 @@ class Warehouse:
         n_out = max(1, -(-total_bytes // int(target_file_bytes)))
         df = spark.read.parquet(path)
         staged = _staged_path(path, "compacting")
-        fs.delete(_hadoop_path(spark, staged), True)
         # coalesce, not repartition: narrowing file count needs no shuffle
         df.coalesce(int(n_out)).write.mode("overwrite").parquet(staged)
         rows = spark.read.parquet(staged).count()
@@ -451,8 +516,7 @@ class Warehouse:
             for s in fs.listStatus(_hadoop_path(spark, staged))
             if s.isFile() and not s.getPath().getName().startswith("_")
         ]
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         return {
             "files_before": files_before,
             "files_after": len(out_files),
@@ -508,13 +572,11 @@ class Warehouse:
             upd.select(*cur.columns)
         )
         staged = _staged_path(path, "upserting")
-        fs.delete(_hadoop_path(spark, staged), True)
         merged.write.mode("overwrite").parquet(staged)
         rows_before = cur.count()
         n_updates = upd.count()
         rows_after = spark.read.parquet(staged).count()
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         matched = rows_before + n_updates - rows_after
         return {
             "rows_before": int(rows_before),
@@ -629,10 +691,8 @@ class Warehouse:
                 F.broadcast(key_df), key_col, "left_anti"
             )
             staged = _staged_path(path, "forgetting")
-            fs.delete(_hadoop_path(spark, staged), True)
             kept.write.mode("overwrite").parquet(staged)
-            fs.delete(p, True)
-            fs.rename(_hadoop_path(spark, staged), p)
+            _swap_into_place(spark, staged, path)
 
         # Days are independent partitions; rewrite several concurrently
         # (Spark job submission is thread-safe — same discipline as the
@@ -692,9 +752,9 @@ def affected_dates(
 
 
 def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) -> list[str]:
-    """Remove orphaned staging directories (``*.__clustering__``,
-    ``*.__compacting__``, ``*.__upserting__``, ``*.__forgetting__``) left
-    behind when a staged write crashed between write and atomic swap.
+    """Remove orphaned staging directories (``date=YYYY-MM-DD.__<op>__``,
+    any op) left behind when a staged write crashed between write and
+    atomic swap.
 
     Crash-safety of the staged-swap discipline means orphans are
     harmless — the live partition was never touched, and the next run of
@@ -711,12 +771,6 @@ def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) 
     """
     import time as _time
 
-    suffixes = (
-        ".__clustering__",
-        ".__compacting__",
-        ".__upserting__",
-        ".__forgetting__",
-    )
     removed: list[str] = []
     now_ms = _time.time() * 1000.0
     fs = _hadoop_fs(spark, root)
@@ -749,7 +803,7 @@ def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) 
             if not st.isDirectory():
                 continue
             p = st.getPath()
-            if p.getName().endswith(suffixes):
+            if _is_staged_name(p.getName()):
                 if now_ms - _newest_mtime_ms(p) >= min_age_sec * 1000.0:
                     fs.delete(p, True)
                     removed.append(p.toUri().getPath())
@@ -765,7 +819,8 @@ def recover_staging(spark: SparkSession, root: str) -> dict:
     service startup, BEFORE serving reads or claiming jobs.
 
     The staged-swap protocol (stage under ``<root>/_staging``, then
-    ``delete(target); rename(staged, target)``) has one vulnerable
+    ``delete(target); mkdirs(parent); rename(staged, target)``,
+    :func:`_swap_into_place`) has one vulnerable
     window: a crash between the delete and the rename leaves the
     partition's ONLY copy in the staging dir — the table is missing a
     day, and a naive job retry reads the table, sees no rows for the
@@ -809,7 +864,7 @@ def recover_staging(spark: SparkSession, root: str) -> dict:
                 continue
             for staged in fs.listStatus(datatype.getPath()):
                 name = staged.getPath().getName()
-                if ".__" not in name or not name.endswith("__"):
+                if not _is_staged_name(name):
                     continue
                 date_part = name.split(".__", 1)[0]
                 target = _hadoop_path(
@@ -897,8 +952,6 @@ def export_partition(
     a downstream consumer); leave False at scale so the export
     parallelizes like any other write.
     """
-    from pyspark.sql.observation import Observation
-
     from etl_gardener_spark.sources.jsonl import TIMESTAMP_FORMAT
 
     df = wh.read_partition(spark, tier, experiment, datatype, day).drop(DATE_COL)

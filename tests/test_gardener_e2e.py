@@ -282,6 +282,19 @@ def _seed_partition(spark, wh, day, rows):
     wh.overwrite_partitions(df, "raw", "ndt", "ndt7")
 
 
+class _RenameReturnsFalse:
+    """FS proxy whose rename fails softly, as Hadoop reports failure."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def rename(self, src, dst):
+        return False
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
 def test_forget_keys_swap_crash_window_recovery(spark, tmp_path, monkeypatch):
     """Injected failure in forget_keys' most dangerous instant: AFTER the
     staged survivors committed and the live partition was deleted, but
@@ -428,16 +441,6 @@ def test_recover_staging_failed_rename_keeps_staged_copy(
     assert os.path.exists(os.path.join(staged, "_SUCCESS"))
 
     # Now recovery runs on a filesystem whose rename FAILS SOFTLY.
-    class _RenameReturnsFalse:
-        def __init__(self, fs):
-            self._fs = fs
-
-        def rename(self, src, dst):
-            return False
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
     monkeypatch.setattr(
         W, "_hadoop_fs", lambda s, p: _RenameReturnsFalse(real_fs(s, p))
     )
@@ -457,6 +460,82 @@ def test_recover_staging_failed_rename_keeps_staged_copy(
         for r in wh.read_partition(spark, "raw", "ndt", "ndt7", day).collect()
     }
     assert got == {("a", 1.0)}
+
+
+_SWAP_OPS = {
+    # op -> (staging op name, call, rows in the day after the op)
+    "cluster": (
+        "clustering",
+        lambda spark, wh, day: wh.cluster_partition(
+            spark, "raw", "ndt", "ndt7", day, ["id"], n_files=1
+        ),
+        3,
+    ),
+    "compact": (
+        "compacting",
+        lambda spark, wh, day: wh.compact_partition(spark, "raw", "ndt", "ndt7", day),
+        3,
+    ),
+    "upsert": (
+        "upserting",
+        lambda spark, wh, day: wh.upsert_partition(
+            spark, "raw", "ndt", "ndt7", day,
+            spark.createDataFrame([("d", 4.0)], "id string, value double"), ["id"],
+        ),
+        4,
+    ),
+    "forget": (
+        "forgetting",
+        lambda spark, wh, day: wh.forget_keys(
+            spark, "raw", "ndt", "ndt7",
+            spark.createDataFrame([("c",)], "id string"), "id",
+        ),
+        2,
+    ),
+    "replace_day": (
+        "copy",
+        lambda spark, wh, day: wh.replace_day(
+            spark, spark.createDataFrame([("z", 0.0)], "id string, value double"),
+            "raw", "ndt", "ndt7", day, "copy",
+        ),
+        1,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SWAP_OPS))
+def test_swap_failed_rename_raises_and_keeps_staged_copy(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every staged swap checks Hadoop rename's FALSE return. The target
+    day is already deleted when the rename runs, so the staged dir holds
+    its only copy: the op must raise (not report success) and keep that
+    copy, which recover_staging then swaps into place."""
+    from datetime import date as D
+
+    from etl_gardener_spark import warehouse as W
+
+    staging_op, call, rows_after = _SWAP_OPS[op]
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = D(2024, 3, 8)
+    _seed_partition(spark, wh, day, [("a", 1.0), ("b", 2.0), ("c", 3.0)])
+
+    real_fs = W._hadoop_fs
+    monkeypatch.setattr(
+        W, "_hadoop_fs", lambda s, p: _RenameReturnsFalse(real_fs(s, p))
+    )
+    with pytest.raises(OSError, match="returned false"):
+        call(spark, wh, day)
+    monkeypatch.setattr(W, "_hadoop_fs", real_fs)
+
+    target = wh.partition_path("raw", "ndt", "ndt7", day)
+    staged = W._staged_path(target, staging_op)
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    assert not wh.partition_exists(spark, "raw", "ndt", "ndt7", day)
+
+    out = W.recover_staging(spark, wh.root)
+    assert out == {"completed": [target], "aborted": [], "failed": []}
+    assert wh.read_partition(spark, "raw", "ndt", "ndt7", day).count() == rows_after
 
 
 def test_dedup_overwrite_executor_failure_leaves_table_intact(spark, tmp_path):
@@ -490,6 +569,12 @@ def test_dedup_overwrite_executor_failure_leaves_table_intact(spark, tmp_path):
     # rollback: original three rows intact, table + partition readable
     assert wh.read_partition(spark, "raw", "ndt", "ndt7", day).count() == 3
     assert wh.read(spark, "raw", "ndt", "ndt7").count() == 3
+
+    # the same failure in a staged swap's write (TableOps.dedup's path)
+    # never reaches the swap: the day stays as it was
+    with pytest.raises(Exception, match="injected executor failure"):
+        wh.replace_day(spark, poisoned, "raw", "ndt", "ndt7", day, "dedup")
+    assert wh.read_partition(spark, "raw", "ndt", "ndt7", day).count() == 3
 
     # retry with the healthy plan lands the dedup result
     wh.overwrite_partitions(survivors, "raw", "ndt", "ndt7")

@@ -90,6 +90,32 @@ def landing(tmp_path):
     return prefix
 
 
+def _seed_annotations(spark, wh) -> None:
+    """raw.annotation2 for 2024-03-01: id0 annotated on d-1, id1 on d."""
+    from datetime import datetime
+
+    import pyspark.sql.functions as F
+
+    ann_rows = [
+        {"id": "id0", "parser": {"Time": datetime(2024, 2, 29, 23)},
+         "client": {"Geo": {"CountryCode": "US"}}},
+        {"id": "id1", "parser": {"Time": datetime(2024, 3, 1, 4)},
+         "client": {"Geo": {"CountryCode": "DE"}}},
+    ]
+    ann_df = spark.createDataFrame(ann_rows, schema=ANN_SCHEMA)
+    wh.append(
+        ann_df.withColumn(
+            "date",
+            F.when(F.col("id") == "id0", F.lit("2024-02-29").cast("date")).otherwise(
+                F.lit("2024-03-01").cast("date")
+            ),
+        ),
+        "raw",
+        "ndt",
+        "annotation2",
+    )
+
+
 def test_full_pipeline(spark, tmp_path, landing):
     wh = Warehouse(str(tmp_path / "wh"))
     job = JobSpec(experiment="ndt", datatype="ndt7", date=date(2024, 3, 1))
@@ -124,28 +150,7 @@ def test_full_pipeline(spark, tmp_path, landing):
     assert not wh.partition_exists(spark, "tmp", "ndt", "ndt7", job.date)
 
     # T5: Join — seed a deduped annotation table incl. a d-1 row
-    from datetime import datetime
-
-    ann_rows = [
-        {"id": "id0", "parser": {"Time": datetime(2024, 2, 29, 23)},
-         "client": {"Geo": {"CountryCode": "US"}}},
-        {"id": "id1", "parser": {"Time": datetime(2024, 3, 1, 4)},
-         "client": {"Geo": {"CountryCode": "DE"}}},
-    ]
-    import pyspark.sql.functions as F
-
-    ann_df = spark.createDataFrame(ann_rows, schema=ANN_SCHEMA)
-    wh.append(
-        ann_df.withColumn(
-            "date",
-            F.when(F.col("id") == "id0", F.lit("2024-02-29").cast("date")).otherwise(
-                F.lit("2024-03-01").cast("date")
-            ),
-        ),
-        "raw",
-        "ndt",
-        "annotation2",
-    )
+    _seed_annotations(spark, wh)
     st = ops.join()
     assert st.rows_out == 11
     joined = wh.read_partition(spark, "join", "ndt", "ndt7", job.date)
@@ -182,6 +187,152 @@ def test_dry_run_returns_plan_without_executing(spark, tmp_path, landing):
     assert "Window" in st.dry_run_plan
     # dry run left the data untouched
     assert wh.read_partition(spark, "tmp", "ndt", "ndt7", job.date).count() == 19
+
+
+def test_spark_jobs_per_table_op(spark, tmp_path, landing):
+    """Each op's Spark job count, read per op from its own job group: T1
+    is its load write; T2/T3/T5 are one write each (counts observed on
+    that write) plus the schema read of each input partition; T4 is a
+    directory delete. Dedup's write adds its window shuffle's map stage,
+    and the join reads three partitions (fact day, annotation d-1 and
+    d)."""
+    import uuid
+
+    sc = spark.sparkContext
+    wh = Warehouse(str(tmp_path / "wh"))
+    _seed_annotations(spark, wh)
+    job = JobSpec(experiment="ndt", datatype="ndt7", date=date(2024, 3, 1))
+    ops = TableOps(spark, wh, job)
+    steps = [
+        ("load_to_tmp", lambda: ops.load_to_tmp(landing, NDT7_SCHEMA), 1),
+        ("dedup", ops.dedup, 3),
+        ("copy_to_raw", ops.copy_to_raw, 2),
+        ("delete_tmp", ops.delete_tmp, 0),
+        ("join", ops.join, 5),
+    ]
+    jobs, rows = {}, {}
+    for op, call, _limit in steps:
+        group = f"jobs-per-op-{op}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, op)
+        try:
+            rows[op] = call().rows_out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[op] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rows == {
+        "load_to_tmp": 19, "dedup": 11, "copy_to_raw": 11, "delete_tmp": 0,
+        "join": 11,
+    }
+    assert all(jobs[op] <= limit for op, _call, limit in steps), jobs
+
+
+def _staging_files(wh: Warehouse) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(os.path.join(wh.root, "_staging"))
+        for f in files
+    ]
+
+
+def _dir_state(path: str) -> dict:
+    return {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
+
+
+def test_empty_tmp_day_leaves_raw_and_join_untouched(spark, tmp_path):
+    """A day whose landing holds only a corrupt line loads an EMPTY tmp
+    day. Dedup and copy then replace nothing: the raw day an earlier run
+    wrote keeps its files, as dynamic partition overwrite left it. A join
+    over an empty raw day likewise keeps the join day. No staging dir is
+    left behind."""
+    from pyspark.sql import functions as F
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    d1, d2 = date(2024, 3, 1), date(2024, 3, 2)
+    earlier = spark.createDataFrame(
+        [("old", "2024-03-01"), ("old", "2024-03-02")], "id string, d string"
+    ).select("id", F.col("d").cast("date").alias("date"))
+    # an earlier run left raw d1 and join d2 (raw d2 has no partition)
+    wh.overwrite_partitions(earlier.filter(F.col("date") == d1), "raw", "ndt", "ndt7")
+    wh.overwrite_partitions(earlier.filter(F.col("date") == d2), "join", "ndt", "ndt7")
+    raw_d1 = wh.partition_path("raw", "ndt", "ndt7", d1)
+    join_d2 = wh.partition_path("join", "ndt", "ndt7", d2)
+    raw_before, join_before = _dir_state(raw_d1), _dir_state(join_d2)
+
+    for day in (d1, d2):
+        prefix = _write_landing(
+            str(tmp_path / "landing"), day.isoformat().replace("-", "/"), [], 1
+        )
+        with open(os.path.join(prefix, "corrupt.jsonl"), "w") as f:
+            f.write('{"id": "bad",,,\n')
+        ops = TableOps(spark, wh, JobSpec(experiment="ndt", datatype="ndt7", date=day))
+        assert ops.load_to_tmp(prefix, NDT7_SCHEMA).rows_out == 0
+        st = ops.dedup()
+        assert (st.rows_out, st.rows_deleted) == (0, 0)
+        assert ops.copy_to_raw().rows_out == 0
+        ops.delete_tmp()
+    # d1's raw day is as the earlier run left it
+    assert _dir_state(raw_d1) == raw_before
+    assert not wh.partition_exists(spark, "raw", "ndt", "ndt7", d2)
+
+    ops = TableOps(spark, wh, JobSpec(experiment="ndt", datatype="ndt7", date=d2))
+    assert ops.join().rows_out == 0
+    assert _dir_state(join_d2) == join_before
+    joined = wh.read_partition(spark, "join", "ndt", "ndt7", d2)
+    assert [r.id for r in joined.collect()] == ["old"]
+    assert _staging_files(wh) == []
+
+
+def test_dedup_swap_crash_window_recovery(spark, tmp_path, landing, monkeypatch):
+    """A crash in dedup's swap AFTER the tmp day was deleted and BEFORE
+    the staged survivors were renamed into place leaves the day's only
+    copy under _staging/. recover_staging completes the swap, and the job
+    then re-runs idempotently from dedup on."""
+    from etl_gardener_spark import warehouse as W
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    job = JobSpec(experiment="ndt", datatype="ndt7", date=date(2024, 3, 1))
+    ops = TableOps(spark, wh, job)
+    ops.load_to_tmp(landing, NDT7_SCHEMA)
+
+    real_fs = W._hadoop_fs
+
+    class _CrashOnRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            if "__dedup__" in src.toUri().getPath():
+                raise RuntimeError("injected crash before swap rename")
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    monkeypatch.setattr(W, "_hadoop_fs", lambda s, p: _CrashOnRename(real_fs(s, p)))
+    with pytest.raises(Exception, match="injected crash"):
+        ops.dedup()
+    monkeypatch.setattr(W, "_hadoop_fs", real_fs)
+
+    # crash state: the tmp day is gone, the survivors sit in staging
+    assert not wh.partition_exists(spark, "tmp", "ndt", "ndt7", job.date)
+    tmp_day = wh.partition_path("tmp", "ndt", "ndt7", job.date)
+    assert os.path.exists(os.path.join(W._staged_path(tmp_day, "dedup"), "_SUCCESS"))
+
+    out = W.recover_staging(spark, wh.root)
+    assert out == {"completed": [tmp_day], "aborted": [], "failed": []}
+    assert wh.read_partition(spark, "tmp", "ndt", "ndt7", job.date).count() == 11
+
+    # the monitor retries the job from dedup: nothing left to delete
+    st = ops.dedup()
+    assert (st.rows_out, st.rows_deleted) == (11, 0)
+    assert ops.copy_to_raw().rows_out == 11
+    ops.delete_tmp()
+    assert ops.join().rows_out == 11
+    raw = wh.read_partition(spark, "raw", "ndt", "ndt7", job.date)
+    assert sorted(r.id for r in raw.collect()) == sorted(f"id{i}" for i in range(11))
+    assert _staging_files(wh) == []
 
 
 def test_partition_overwrite_only_touches_target_day(spark, tmp_path):
@@ -448,20 +599,23 @@ def test_vacuum_staging_age_gated(spark, tmp_path):
 
     root = tmp_path / "wh"
     stale = root / "tmp_exp" / "t" / "date=2024-01-01.__compacting__"
+    # a table op's swap (TableOps.dedup) stages under _staging/
+    stale_op = root / "_staging" / "tmp_exp" / "t" / "date=2024-01-03.__dedup__"
     fresh = root / "tmp_exp" / "t" / "date=2024-01-02.__clustering__"
     live = root / "tmp_exp" / "t" / "date=2024-01-01"
-    for d in (stale, fresh, live):
+    for d in (stale, stale_op, fresh, live):
         d.mkdir(parents=True)
         (d / "part-0.parquet").write_bytes(b"x")
     old = time.time() - 7200
     # age the dir AND its contents: the sweep uses the newest mtime in
     # the tree, so an in-flight write's fresh task files protect it
-    os.utime(stale, (old, old))
-    os.utime(stale / "part-0.parquet", (old, old))
+    for d in (stale, stale_op):
+        os.utime(d, (old, old))
+        os.utime(d / "part-0.parquet", (old, old))
 
     removed = vacuum_staging(spark, str(root), min_age_sec=3600)
-    assert removed == [str(stale)]
-    assert not stale.exists()
+    assert sorted(removed) == sorted([str(stale), str(stale_op)])
+    assert not stale.exists() and not stale_op.exists()
     assert fresh.exists() and live.exists()  # young staging + live data kept
 
 
